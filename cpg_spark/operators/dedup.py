@@ -35,6 +35,8 @@ from .textstats import doc_tokens, has_min_tokens
 MINHASH_K = 8
 LSH_ROWS_PER_BAND = 2
 SIMHASH_BITS = 16
+# token n-gram width of every shingle kernel; the DuckDB oracles assume 3
+DEFAULT_SHINGLE_N = 3
 
 
 def normalized_text(text: Column) -> Column:
@@ -59,7 +61,7 @@ def exact_dup_map(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_hash_array(text: Column, n: int = 3) -> Column:
+def shingle_hash_array(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
     """array<long> of hashed token n-gram shingles (order-sensitive).
 
     r7 kernel: hash each TOKEN once, then compose per-shingle with the
@@ -101,7 +103,7 @@ def shingle_hash_array(text: Column, n: int = 3) -> Column:
 
 
 @lru_cache(maxsize=None)
-def _shingle_text_col(n: int = 3) -> Column:
+def _shingle_text_col(n: int = DEFAULT_SHINGLE_N) -> Column:
     """shingle_hash_array over col('text'), memoized per n. The kernel's
     Column tree is immutable and data-free (a pure code artifact), but
     BUILDING it costs ~0.5 s of py4j round trips per call — a fixed
@@ -112,13 +114,14 @@ def _shingle_text_col(n: int = 3) -> Column:
     return shingle_hash_array(F.col("text"), n)
 
 
-def shingle_index(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_index(docs: DataFrame, n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """Inverted-index rows (doc_id, lang, sh) — distinct shingle hashes
     per doc. Distinct-by-shuffle on purpose: the index feeds three
     consumers (both join sides + the size table), and the exchange is
     reused across them instead of re-hashing every shingle 3x. At 100 TB
     this is the step you materialize as its own table."""
-    assert n == 3, "shingle_hash_array is fixed at n=3 (oracle parity)"
+    if n != DEFAULT_SHINGLE_N:
+        raise ValueError(f"shingle_index is fixed at n={DEFAULT_SHINGLE_N} (oracle parity)")
     return exploded_shingles(docs, keep=("lang",)).distinct()
 
 
@@ -129,7 +132,7 @@ def exploded_shingles(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     expression (which blows past the codegen method limit and falls back
     to interpreted evaluation — measured 25x slower)."""
     return docs.select(
-        "doc_id", *keep, F.explode(_shingle_text_col(3)).alias("sh")
+        "doc_id", *keep, F.explode(_shingle_text_col(DEFAULT_SHINGLE_N)).alias("sh")
     )
 
 
@@ -232,7 +235,7 @@ def _df_capped(idx: DataFrame, max_doc_freq: int) -> DataFrame:
 
 def jaccard_pairs(
     docs: DataFrame,
-    n: int = 3,
+    n: int = DEFAULT_SHINGLE_N,
     min_jaccard: float = 0.0,
     same_lang: bool = True,
     max_doc_freq: int | None = None,
@@ -282,7 +285,7 @@ def jaccard_pairs(
 def jaccard_for_pairs(
     docs: DataFrame,
     pairs: DataFrame,
-    n: int = 3,
+    n: int = DEFAULT_SHINGLE_N,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard computed ONLY for the given candidate pairs

@@ -33,7 +33,8 @@ def _lit_double_array(vals) -> Column:
     reads it back with correctly-rounded parsing — the resulting
     doubles are bit-identical to F.lit(v)."""
     vs = [float(v) for v in vals]
-    assert all(math.isfinite(v) for v in vs), "finite doubles only"
+    if not all(math.isfinite(v) for v in vs):
+        raise ValueError("_lit_double_array takes finite doubles only")
     return F.expr(
         "array(" + ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in vs) + ")"
     )

@@ -21,14 +21,11 @@ barrier and the next run resumes from the last committed snapshot.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import SnapshotCatalog
-from ..lineage import StageTimer, append_lineage, partition_counts
 from ..operators import canonicalize, extract, link, materialize
 from ..synth import TARGET_LANGS
+from .staged import StagedRun, fingerprinter
 
 # bump when stage semantics change — invalidates committed snapshots
 PIPELINE_VERSION = "1"
@@ -36,11 +33,7 @@ PIPELINE_VERSION = "1"
 STAGES = ("sentences", "mentions", "links", "components", "triples", "triples_agg", "nodes")
 
 
-def _fingerprint(*parts: str) -> str:
-    return hashlib.sha1("\x00".join(parts).encode()).hexdigest()
-
-
-class KgPipeline:
+class KgPipeline(StagedRun):
     def __init__(
         self,
         spark: SparkSession,
@@ -49,46 +42,9 @@ class KgPipeline:
         target_langs: tuple[str, ...] = TARGET_LANGS,
         extract_partitions: int | None = None,
     ):
-        self.spark = spark
-        self.catalog = SnapshotCatalog(warehouse)
-        self.warehouse = warehouse
-        self.run_id = run_id
+        super().__init__(spark, warehouse, run_id)
         self.target_langs = target_langs
         self.extract_partitions = extract_partitions
-        self.skipped: list[str] = []
-        self.ran: list[str] = []
-
-    # -- one checkpointed stage ------------------------------------------------
-    def _stage(
-        self,
-        name: str,
-        fingerprint: str,
-        compute,
-        input_split: str,
-    ) -> DataFrame:
-        if self.catalog.has_snapshot(name, fingerprint):
-            self.skipped.append(name)
-            return self.catalog.read(self.spark, name)
-        timer = StageTimer()
-        df = compute().cache()
-        pc = partition_counts(df)
-        manifest = self.catalog.write(
-            df, name, fingerprint, stage=name, run_id=self.run_id
-        )
-        append_lineage(
-            self.spark,
-            self.warehouse,
-            self.run_id,
-            name,
-            input_split,
-            rows_in=None,
-            per_partition_out=pc,
-            wall_ms=timer.wall_ms(),
-            snapshot_id=manifest["snapshot_id"],
-        )
-        df.unpersist()
-        self.ran.append(name)
-        return self.catalog.read(self.spark, name)
 
     # -- the DAG ----------------------------------------------------------------
     def run(
@@ -100,14 +56,8 @@ class KgPipeline:
     ) -> dict[str, DataFrame]:
         """Run (or resume) the full pipeline. `input_token` must uniquely
         identify the input data (path or generator seed/size)."""
-        fps: dict[str, str] = {}
         out: dict[str, DataFrame] = {}
-
-        def fp(stage: str, *upstream: str) -> str:
-            fps[stage] = _fingerprint(
-                input_token, PIPELINE_VERSION, stage, *[fps[u] for u in upstream]
-            )
-            return fps[stage]
+        fp = fingerprinter(input_token, PIPELINE_VERSION)
 
         if self.extract_partitions:
             pages = pages.repartition(self.extract_partitions, "url")

@@ -81,8 +81,16 @@ def test_lit_double_array_bit_exact(spark):
 
 
 def test_lit_double_array_rejects_non_finite():
-    with pytest.raises(AssertionError):
-        similarity._lit_double_array([1.0, float("inf")])
+    """A ValueError, not an assert that python -O strips out."""
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError, match="finite"):
+            similarity._lit_double_array([1.0, bad])
+
+
+def test_shingle_index_rejects_other_widths(spark):
+    docs = spark.createDataFrame([(1, "en", "a b c d")], "doc_id long, lang string, text string")
+    with pytest.raises(ValueError, match="n=3"):
+        dedup.shingle_index(docs, n=dedup.DEFAULT_SHINGLE_N + 1)
 
 
 def test_scan_cache_hits_and_invalidation(spark, tmp_path):
