@@ -4,7 +4,9 @@ A stage is (name, fingerprint, compute). A rerun skips every stage whose
 fingerprint is already committed and reads its snapshot instead; a stage
 that runs commits its output through the snapshot catalog and appends
 per-partition lineage rows. The snapshot write is the stage's only Spark
-action: the lineage counts come from the committed files' footers.
+action: the lineage counts come from the committed files' footers. The
+commit also releases the checkpoints its compute made (an iterative
+operator's rounds), since later stages read the snapshot instead.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import lineage
 from ..catalog import SnapshotCatalog
+from ..operators import iterutil
 
 
 def fingerprinter(*prefix: str):
@@ -46,9 +49,10 @@ class StagedRun:
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         t0 = time.monotonic()
-        manifest = self.catalog.write(
-            compute(), name, fingerprint, stage=name, run_id=self.run_id
-        )
+        with iterutil.scoped_checkpoints(self.spark):
+            manifest = self.catalog.write(
+                compute(), name, fingerprint, stage=name, run_id=self.run_id
+            )
         lineage.append_lineage(
             self.warehouse,
             self.run_id,

@@ -65,6 +65,11 @@ class _Catalog:
         return {"path": path, "snapshot_id": 1}
 
 
+# a SparkSession stand-in with nothing persisted, for the stage core's
+# checkpoint release
+_NO_SPARK = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=SimpleNamespace(getPersistentRDDs=dict)))
+
+
 def test_stage_core_runs_through_patched_names(tmp_path):
     """CurationPipeline._stage is called once per stage with the stage
     name first, and the core appends lineage through the module, so
@@ -73,7 +78,7 @@ def test_stage_core_runs_through_patched_names(tmp_path):
     workloads._trace_curation(tracer)
     try:
         pipe = SimpleNamespace(
-            spark=None,
+            spark=_NO_SPARK,
             warehouse=str(tmp_path),
             run_id="hooks",
             catalog=_Catalog(str(tmp_path), committed={"gate"}),

@@ -17,6 +17,10 @@ def _persisted(spark) -> int:
     return len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
 def _commit(spark, wh: str, name: str, compute):
     """Run one stage under a fresh job group; returns (output, job ids)."""
     sc = spark.sparkContext
@@ -43,6 +47,23 @@ def test_stage_commit_is_one_write_job(spark, tmp_path):
     assert _persisted(spark) == base
     assert _rows(spark, wh, "nums") == [(p, 250) for p in range(4)]
     assert sum(n for _, n in _rows(spark, wh, "nums")) == out.count() == 1000
+
+
+def test_stage_commit_releases_the_checkpoints_it_made(spark, tmp_path):
+    """Checkpoints made by the stage's compute leave the block store at
+    the commit; one the caller made before the stage is kept."""
+    wh = str(tmp_path / "wh")
+    held = spark.range(0, 100, 1, 2).localCheckpoint()
+    before = _persisted_ids(spark)
+    out, _ = _commit(
+        spark,
+        wh,
+        "ckpt",
+        lambda: spark.range(0, 1000, 1, 4).localCheckpoint().unionByName(held),
+    )
+    assert _persisted_ids(spark) <= before
+    assert out.count() == 1100
+    assert held.count() == 100
 
 
 def test_empty_stage_gets_one_zero_row(spark, tmp_path):
